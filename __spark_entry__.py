@@ -52,7 +52,7 @@ _CHANGED_R05 = [
     "event_props_k",
 ]
 
-CHANGED_THIS_ROUND = [
+_CHANGED_R06 = [
     # round 6 (optimization round): results are bit-identical by
     # design, but the BACKING IMPLEMENTATIONS changed, so every
     # consumer rotates into the window for a fresh driver-grade check.
@@ -83,6 +83,35 @@ CHANGED_THIS_ROUND = [
     "shingle_overlap",
     "winnow_fp",
     "cms_topk",
+]
+
+CHANGED_THIS_ROUND = [
+    # round 7: one per-document kernel per KG stage, shared by the
+    # modular and fused paths (ie.parse_extraction, et.parse_tagging,
+    # ea.align_doc, lp.doc_graph, lp.accepted_links) — every consumer
+    # of extract_triples / tag_triples / align_entities /
+    # analyze_graph / materialize_kg / fused_kg rotates in:
+    "ie_triples",
+    "ie_counts",
+    "et_typed",
+    "ea_mentions",
+    "ea_entities",
+    "ea_entities_merged",
+    "ea_entities_cc",
+    "ea_ioc_unmerge",
+    "lp_graph",
+    "lp_split_graph",
+    "lp_links_flaky",
+    "kg_triples",
+    "kg_fused",
+    "kg_entity_degree",
+    "kg_entity_cooc",
+    "kg_global_entities",
+    # demos.load_demo_corpus now raises on a missing/empty corpus:
+    "ie_demo_topk",
+    # round 6's edit_distance_join lazy guard (its consumer missed the
+    # r06 changed set):
+    "part_name_fuzzy",
 ]
 
 # Per-round rotation fronts (the driver window = first WINDOW names of
@@ -135,7 +164,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
     # verification-refresh fill (round-5 VERDICT #1) — the queries
     # whose only greens date to r01-r03, then three of the stalest r04
     # rows the verdict named. 22 + 25 + 3 = exactly WINDOW names.
-    "r06": CHANGED_THIS_ROUND + [
+    "r06": _CHANGED_R06 + [
         "doc_text_norm", "ie_triples", "ie_counts", "et_typed",
         "token_stats", "quality", "lang_features", "gopher_rules",
         "repetition_ratios", "lm_scores", "doc_chunks", "redact_pii",
@@ -144,6 +173,21 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "lsh_buckets", "lsh_topk", "knn_vote", "mm_metadata",
         "mm_frame_plan",
         "tpch_q1", "ivf_topk", "pq_adc_topk",
+    ],
+    # round 7 (simplicity): the changed set first, then every row whose
+    # latest driver-green window is r04 (the stalest coverage), then
+    # two r05-only rows. 18 + 30 + 2 = exactly WINDOW names.
+    "r07": CHANGED_THIS_ROUND + [
+        "pack_plan", "ivf_assign", "quality_gate", "text_dedupe",
+        "revenue_join", "region_revenue", "user_top_events",
+        "event_sessions", "event_sessions_native", "event_type_rollup",
+        "order_percentiles", "revenue_rollup", "event_leadlag",
+        "part_triangles", "stratified_sample", "mixture_plan",
+        "decontaminate", "vocab_topk", "line_dedup", "domain_cap",
+        "dsir_features", "bpe_merges", "token_pmi", "dup_grams",
+        "table_profile", "cdc_chunks", "langid", "rand_proj", "pq_codes",
+        "ivf_pq_topk",
+        "doc_sample", "url_ops",
     ],
 }
 

@@ -3,8 +3,9 @@
 The reference loads 148 ICL example JSONs from data/demo at every
 extraction call (llm_processor.py:1326-1332). Here the corpus is read
 once on the driver and the fitted TF-IDF model is closure-captured
-into the retrieval UDF (an effective broadcast). Falls back cleanly
-when the reference corpus directory is absent.
+into the retrieval UDF (an effective broadcast). A missing or empty
+corpus directory raises FileNotFoundError: retrieval over zero demos
+would silently give every document zero in-context examples.
 """
 
 from __future__ import annotations
@@ -16,15 +17,17 @@ REFERENCE_DEMO_DIR = "/root/reference/ctinexus/data/demo"
 
 
 def load_demo_corpus(path: str = REFERENCE_DEMO_DIR) -> tuple[list[str], list[str], list[list[dict]]]:
-    """→ (demo_ids, texts, explicit_triplets) in sorted-filename order."""
+    """→ (demo_ids, texts, explicit_triplets) in sorted-filename order.
+    Raises FileNotFoundError when `path` is not a directory or holds no
+    `*.json` demos."""
+    names = sorted(os.listdir(path)) if os.path.isdir(path) else []
+    names = [n for n in names if n.endswith(".json")]
+    if not names:
+        raise FileNotFoundError(f"no *.json demonstrations in {path!r}")
     ids: list[str] = []
     texts: list[str] = []
     triplets: list[list[dict]] = []
-    if not os.path.isdir(path):
-        return ids, texts, triplets
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".json"):
-            continue
+    for name in names:
         with open(os.path.join(path, name), encoding="utf-8") as f:
             js = json.load(f)
         ids.append(name[: -len(".json")])

@@ -20,9 +20,11 @@ deterministic.
 
 Scale shape: minting is pure DataFrame ops (one shuffle on url);
 embedding is a broadcast-free pandas UDF over distinct texts; the
-merge runs per document via applyInPandas — at 10^12 docs the groups
-stay tiny (≤ dozens of mentions), so this parallelizes across
-documents with a single url-shuffle instead of an O(n²) global join.
+merge (align_doc) runs per document inside one
+partitioning.grouped_map_stitched pass — many documents per Arrow
+batch, and at 10^12 docs the groups stay tiny (≤ dozens of mentions),
+so this parallelizes across documents with a single url-shuffle
+instead of an O(n²) global join.
 `ea_cluster_mode="cc"` swaps star-sets for connected components over
 the ≥threshold similarity edges (north_star semantics).
 """
@@ -133,7 +135,7 @@ def embed_mentions(nodes: DataFrame, model) -> DataFrame:
     )
 
 
-# --- per-document merge + IOC unmerge (applyInPandas body) -------------
+# --- per-document merge + IOC unmerge ----------------------------------
 
 
 def _cosine_matrix(vecs: np.ndarray) -> np.ndarray:
@@ -174,41 +176,37 @@ def _clusters_cc(group: list[int], neighbors: dict[int, set[int]]) -> list[set[i
     return comps
 
 
-def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFrame:
-    pdf = pdf.sort_values("pos", kind="stable").reset_index(drop=True)
-    n_rows = len(pdf)
-    # pull columns out ONCE — per-element .iloc in loops is the slow path
-    mids = pdf["mention_id"].to_numpy()
-    texts = pdf["mention_text"].tolist()
-    classes = pdf["mention_class"].tolist()
-    embeddings_col = pdf["embedding"].tolist()
+def align_doc(
+    mids: list[int], texts: list[str], classes: list[str],
+    emb_of, threshold: float, mode: str,
+) -> tuple[list[int], list[str], list[list[str]]]:
+    """EA merge + IOC unmerge for ONE document's node rows in traversal
+    order (subject, object per triple). `emb_of` maps mention text →
+    vector; the cosine runs in float64 over whatever vectors it is
+    given. Returns per-row (entity_ids, entity_texts, merged).
 
+    Shared by the modular align pass (_align_one_doc) and the fused
+    align+graph pass (operators/fused.py)."""
+    n = len(mids)
     # node_dict: mention_id -> row indices in traversal order
     node_rows: dict[int, list[int]] = {}
-    for i in range(n_rows):
-        node_rows.setdefault(int(mids[i]), []).append(i)
-
-    # embeddings per mention_id (first row's vector; identical by text)
-    emb: dict[int, np.ndarray] = {
-        m: np.asarray(embeddings_col[rows[0]], dtype=np.float64)
-        for m, rows in node_rows.items()
-    }
+    for i in range(n):
+        node_rows.setdefault(mids[i], []).append(i)
     text_of = {m: texts[rows[0]] for m, rows in node_rows.items()}
 
     # class blocking in first-appearance order
     class_order: list[str] = []
     class_members: dict[str, set[int]] = {}
-    for i in range(n_rows):
+    for i in range(n):
         c = classes[i]
         if c not in class_members:
             class_members[c] = set()
             class_order.append(c)
-        class_members[c].add(int(mids[i]))
+        class_members[c].add(mids[i])
 
     entity_id = 0
     # per-mention assignment (last write wins, as in the reference)
     ent_of: dict[int, tuple[int, str, list[str]]] = {}
-
     for c in class_order:
         group = sorted(class_members[c])
         if len(group) == 1:
@@ -216,36 +214,27 @@ def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFra
             ent_of[m] = (entity_id, text_of[m], [])
             entity_id += 1
             continue
-
-        vecs = np.vstack([emb[m] for m in group])
+        vecs = np.array([emb_of[text_of[m]] for m in group], dtype=np.float64)
         sims = _cosine_matrix(vecs)
         neighbors: dict[int, set[int]] = {m: set() for m in group}
         for i, m1 in enumerate(group):
             for j in range(i + 1, len(group)):
                 if sims[i, j] >= threshold:
-                    m2 = group[j]
-                    neighbors[m1].add(m2)
-                    neighbors[m2].add(m1)
-
+                    neighbors[m1].add(group[j])
+                    neighbors[group[j]].add(m1)
         clusters = (_clusters_cc if mode == "cc" else _clusters_star)(group, neighbors)
         for cluster in clusters:
             members = sorted(cluster)
             # canonical: frequency argmax, ties → lowest mention_id
             canon = max(members, key=lambda m: (len(node_rows[m]), -m))
-            canon_text = text_of[canon]
             all_texts = [text_of[m] for m in members]
             for m in members:
-                ent_of[m] = (
-                    entity_id,
-                    canon_text,
-                    [t for t in all_texts if t != text_of[m]],
-                )
+                ent_of[m] = (entity_id, text_of[canon], [t for t in all_texts if t != text_of[m]])
             entity_id += 1
 
-    # materialize per-node columns
-    ent_ids = np.empty(n_rows, dtype=np.int64)
-    ent_texts: list[str] = [""] * n_rows
-    merged: list[list[str]] = [[] for _ in range(n_rows)]
+    ent_ids = [0] * n
+    ent_texts = [""] * n
+    merged: list[list[str]] = [[] for _ in range(n)]
     for m, rows in node_rows.items():
         e_id, e_text, m_list = ent_of[m]
         for r in rows:
@@ -255,11 +244,10 @@ def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFra
 
     # --- IOC unmerge (PostProcessor, cti_processor.py:53-115) ---
     entity_idx = entity_id
-    first_mid_of_text = {}
-    for i in range(n_rows):
-        first_mid_of_text.setdefault(texts[i], int(mids[i]))
-
-    for i in range(n_rows):
+    first_mid_of_text: dict[str, int] = {}
+    for i in range(n):
+        first_mid_of_text.setdefault(texts[i], mids[i])
+    for i in range(n):
         if not merged[i]:
             continue
         iocs = detect_iocs(merged[i], texts[i])
@@ -269,21 +257,30 @@ def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFra
         for m_text in sorted(iocs, key=lambda t: first_mid_of_text.get(t, 1 << 30)):
             if m_text not in first_mid_of_text:
                 continue
-            m_id = first_mid_of_text[m_text]
-            rows = node_rows[m_id]
+            rows = node_rows[first_mid_of_text[m_text]]
             new_id = entity_idx
             if ent_texts[rows[0]] != m_text:
                 entity_idx += 1
             for r in rows:
-                if texts[r] == ent_texts[r]:
-                    merged[r] = []
-                else:
-                    merged[r] = []
+                merged[r] = []
+                if texts[r] != ent_texts[r]:
                     ent_ids[r] = new_id
                     ent_texts[r] = m_text
+    return ent_ids, ent_texts, merged
 
-    out = pdf.drop(columns=["embedding"]).copy()
-    out["entity_id"] = ent_ids.astype("int32")
+
+def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFrame:
+    """pandas adapter over align_doc for one document's node rows.
+    The vectors are the float32 ones shipped through the url shuffle
+    (the fused path embeds in-pass and keeps the model's float64)."""
+    pdf = pdf.sort_values("pos", kind="stable").reset_index(drop=True)
+    texts = pdf["mention_text"].tolist()
+    ent_ids, ent_texts, merged = align_doc(
+        pdf["mention_id"].tolist(), texts, pdf["mention_class"].tolist(),
+        dict(zip(texts, pdf["embedding"])), threshold, mode,
+    )
+    out = pdf.drop(columns=["embedding"])
+    out["entity_id"] = np.asarray(ent_ids, dtype="int32")
     out["entity_text"] = ent_texts
     out["mention_merged"] = merged
     return out
@@ -319,19 +316,3 @@ def align_entities(
 
     return grouped_map_stitched(with_vecs, "url", _process, ALIGNED_SCHEMA)
 
-
-def aligned_triples(aligned_nodes: DataFrame) -> DataFrame:
-    """Re-assemble per-node rows into triples_aligned
-    (url, t_idx, subject struct, relation from triples omitted here —
-    callers join relation back from triples_typed)."""
-    node_struct = F.struct(
-        "mention_id", "mention_text", "mention_class", "mention_merged",
-        "entity_id", "entity_text",
-    )
-    subj = aligned_nodes.filter(F.col("side") == "subject").select(
-        "url", "t_idx", node_struct.alias("subject")
-    )
-    obj = aligned_nodes.filter(F.col("side") == "object").select(
-        "url", "t_idx", node_struct.alias("object")
-    )
-    return subj.join(obj, ["url", "t_idx"])

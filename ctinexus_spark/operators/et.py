@@ -29,6 +29,12 @@ ET_SCHEMA = (
 )
 
 
+ET_COLUMNS = [
+    "url", "t_idx", "subject_text", "subject_class",
+    "relation", "object_text", "object_class", "valid",
+]
+
+
 def _first_key_or_default(cls) -> str:
     if isinstance(cls, dict):
         keys = list(cls.keys())
@@ -38,10 +44,47 @@ def _first_key_or_default(cls) -> str:
     return "default"
 
 
+def parse_tagging(resp) -> list[tuple]:
+    """One ET response → (subject_text, subject_class, relation,
+    object_text, object_class, ok) rows in the model's order. Reads
+    `tagged_triples`, falling back to `triplets`; rejects keep
+    ok=False. Shared by tag_triples and the fused IE+ET pass."""
+    try:
+        payload = parse_llm_json(resp)
+    except ValueError:
+        payload = {}
+    if not isinstance(payload, dict):
+        payload = {}
+    tagged = payload.get("tagged_triples")
+    if tagged is None:
+        tagged = payload.get("triplets", [])
+    if not isinstance(tagged, list):
+        return []
+    rows = []
+    for t in tagged:
+        d = t if isinstance(t, dict) else {}
+        s, o = (v if isinstance(v, dict) else {} for v in (d.get("subject"), d.get("object")))
+        rows.append((s.get("text"), _first_key_or_default(s.get("class")), d.get("relation"),
+                     o.get("text"), _first_key_or_default(o.get("class")), valid_typed_triplet(t)))
+    return rows
+
+
+def typed_frame(urls, responses) -> pd.DataFrame:
+    """Per-document ET responses → ET_COLUMNS rows, t_idx = the
+    triple's position in its response."""
+    rows = [
+        (url, i, *row)
+        for url, resp in zip(urls, responses)
+        for i, row in enumerate(parse_tagging(resp))
+    ]
+    return pd.DataFrame(rows, columns=ET_COLUMNS)
+
+
 def tag_triples(triples_ie: DataFrame, docs: DataFrame, model) -> DataFrame:
     """triples_ie(url, t_idx, subject, relation, object) + documents →
     typed triples (url, t_idx, subject_text, subject_class, relation,
-    object_text, object_class, valid)."""
+    object_text, object_class, valid). Only documents with at least one
+    IE triple get an ET call."""
     per_doc = (
         triples_ie.groupBy("url")
         .agg(F.sort_array(F.collect_list(F.struct("t_idx", "subject", "relation", "object"))).alias("triples"))
@@ -50,7 +93,6 @@ def tag_triples(triples_ie: DataFrame, docs: DataFrame, model) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf["text_norm"].fillna("").tolist()
             triples_per_doc = [
                 [
                     {"subject": t["subject"], "relation": t["relation"], "object": t["object"]}
@@ -58,44 +100,7 @@ def tag_triples(triples_ie: DataFrame, docs: DataFrame, model) -> DataFrame:
                 ]
                 for doc_triples in pdf["triples"]
             ]
-            responses = model.tag(texts, triples_per_doc)
-            rows = []
-            for url, resp in zip(pdf["url"], responses):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {}
-                if not isinstance(payload, dict):
-                    payload = {}
-                tagged = payload.get("tagged_triples")
-                if tagged is None:
-                    tagged = payload.get("triplets", [])
-                if not isinstance(tagged, list):
-                    tagged = []
-                for i, t in enumerate(tagged):
-                    ok = valid_typed_triplet(t)
-                    subj = t.get("subject") if isinstance(t, dict) else {}
-                    obj = t.get("object") if isinstance(t, dict) else {}
-                    subj = subj if isinstance(subj, dict) else {}
-                    obj = obj if isinstance(obj, dict) else {}
-                    rows.append(
-                        (
-                            url,
-                            i,
-                            subj.get("text"),
-                            _first_key_or_default(subj.get("class")),
-                            t.get("relation") if isinstance(t, dict) else None,
-                            obj.get("text"),
-                            _first_key_or_default(obj.get("class")),
-                            ok,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "t_idx", "subject_text", "subject_class",
-                    "relation", "object_text", "object_class", "valid",
-                ],
-            )
+            responses = model.tag(pdf["text_norm"].fillna("").tolist(), triples_per_doc)
+            yield typed_frame(pdf["url"], responses)
 
     return per_doc.mapInPandas(run, schema=ET_SCHEMA)

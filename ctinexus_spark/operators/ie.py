@@ -77,48 +77,48 @@ def attach_random_demos(
     return docs.withColumn("demo_ids", F.array(*[F.lit(d) for d in picked]))
 
 
+def parse_extraction(resp) -> list[tuple]:
+    """One IE response → (subject, relation, object, ok) rows in the
+    model's order: JSON-repair cascade, then the IE validation filter.
+    Dict-shaped mentions resolve to text/mention_text; rejects keep
+    ok=False. Shared by extract_triples and the fused IE+ET pass."""
+    try:
+        payload = parse_llm_json(resp)
+    except ValueError:
+        payload = {}
+    triplets = payload.get("triplets", []) if isinstance(payload, dict) else []
+    if not isinstance(triplets, list):
+        return []
+    rows = []
+    for t in triplets:
+        d = t if isinstance(t, dict) else {}
+        s, o = (
+            v.get("text") or v.get("mention_text") if isinstance(v, dict) else v
+            for v in (d.get("subject"), d.get("object"))
+        )
+        rows.append((s if isinstance(s, str) else None, d.get("relation"),
+                     o if isinstance(o, str) else None, valid_ie_triplet(t)))
+    return rows
+
+
 def extract_triples(docs: DataFrame, model, text_col: str = "text_norm") -> DataFrame:
     """documents → (url, t_idx, subject, relation, object, valid).
 
     `model` is a ModelClient; its `.extract(texts)` gets one call per
-    Arrow batch. Responses ride through the JSON-repair cascade, then
-    the IE validation filter; rejects keep valid=false.
+    Arrow batch. Each response goes through parse_extraction; rejects
+    keep valid=false.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf[text_col].fillna("").tolist()
-            responses = model.extract(texts)
-            rows = []
-            for url, resp in zip(pdf["url"], responses):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {"triplets": []}
-                triplets = payload.get("triplets", [])
-                if not isinstance(triplets, list):
-                    triplets = []
-                for i, t in enumerate(triplets):
-                    ok = valid_ie_triplet(t)
-                    subj = t.get("subject") if isinstance(t, dict) else None
-                    obj = t.get("object") if isinstance(t, dict) else None
-                    if isinstance(subj, dict):
-                        subj = subj.get("text") or subj.get("mention_text")
-                    if isinstance(obj, dict):
-                        obj = obj.get("text") or obj.get("mention_text")
-                    rows.append(
-                        (
-                            url,
-                            i,
-                            subj if isinstance(subj, str) else None,
-                            t.get("relation") if isinstance(t, dict) else None,
-                            obj if isinstance(obj, str) else None,
-                            ok,
-                        )
-                    )
+            responses = model.extract(pdf[text_col].fillna("").tolist())
+            rows = [
+                (url, i, *row)
+                for url, resp in zip(pdf["url"], responses)
+                for i, row in enumerate(parse_extraction(resp))
+            ]
             yield pd.DataFrame(
                 rows, columns=["url", "t_idx", "subject", "relation", "object", "valid"]
             )
 
-    cols = ["url", text_col]
-    return docs.select(*cols).mapInPandas(run, schema=IE_SCHEMA)
+    return docs.select("url", text_col).mapInPandas(run, schema=IE_SCHEMA)

@@ -15,11 +15,10 @@ llm_processor.py:900-1015):
 Order pins (SURVEY.md §7): components ordered by the first traversal
 appearance of any member; argmax ties break toward lower entity_id.
 
-Spark shape: component/degree/main/topic run per document inside one
-applyInPandas (union-find, no recursion — the reference's recursive
-DFS would blow the stack on big components); link calls batch per
-Arrow batch in mapInPandas; the guard is plain column logic on the
-model output.
+Spark shape: component/degree/main/topic (doc_graph) run per document
+inside one partitioning.grouped_map_stitched pass (many documents per
+Arrow batch); link calls batch per Arrow batch in mapInPandas; the
+guard is plain column logic on the model output.
 """
 
 from __future__ import annotations
@@ -44,87 +43,79 @@ LINKS_SCHEMA = (
 )
 
 
-class _DSU:
-    def __init__(self):
-        self.parent: dict[int, int] = {}
+GRAPH_COLUMNS = [
+    "url", "entity_id", "entity_text", "component_id",
+    "component_size", "degree", "is_main", "is_topic",
+]
 
-    def find(self, x: int) -> int:
+
+def doc_graph(entity_ids: list[int], entity_texts: list[str], t_idxs: list[int]):
+    """Components, degree, main and topic of ONE document's aligned
+    node rows in traversal order (subject, object per triple).
+
+    Returns (components, degree, text_of, mains, topic): components in
+    discovery order (min first position of a member), each listing its
+    entity ids in first-appearance order; degree and text_of (first
+    row's entity_text) per entity id; mains[i] = main of components[i];
+    topic = main of the largest component (None for an empty doc).
+    Union-find, no recursion — the reference's recursive DFS would blow
+    the stack on big components. Shared by the modular analyze pass
+    (_analyze_doc) and the fused align+graph pass (operators/fused.py)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
         root = x
-        while self.parent.setdefault(root, root) != root:
-            root = self.parent[root]
-        while self.parent[x] != root:  # path compression
-            self.parent[x], x = root, self.parent[x]
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
         return root
-
-    def union(self, a: int, b: int):
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.parent[max(ra, rb)] = min(ra, rb)
-
-
-def _analyze_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Input: per-doc aligned node rows (url, pos, entity_id,
-    entity_text, t_idx, side). Output: one row per entity with
-    component/degree/main/topic flags."""
-    pdf = pdf.sort_values("pos", kind="stable")
-    url = pdf["url"].iloc[0]
-    # column extraction once — iterrows() is the slow path
-    eids = pdf["entity_id"].to_numpy()
-    poss = pdf["pos"].to_numpy()
-    tidxs = pdf["t_idx"].to_numpy()
-    sides = pdf["side"].tolist()
-    etexts = pdf["entity_text"].tolist()
 
     first_pos: dict[int, int] = {}
     text_of: dict[int, str] = {}
     degree: dict[int, int] = {}
-    dsu = _DSU()
-
-    by_triple: dict[int, dict[str, int]] = {}
-    for i in range(len(pdf)):
-        e = int(eids[i])
+    by_triple: dict[int, list[int]] = {}
+    for i, e in enumerate(entity_ids):
         if e not in first_pos:
-            first_pos[e] = int(poss[i])
-            text_of[e] = etexts[i]
+            first_pos[e] = i
+            text_of[e] = entity_texts[i]
             degree[e] = 0
         degree[e] += 1
-        by_triple.setdefault(int(tidxs[i]), {})[sides[i]] = e
-
-    for sides in by_triple.values():
-        if "subject" in sides and "object" in sides:
-            dsu.union(sides["subject"], sides["object"])
+        by_triple.setdefault(t_idxs[i], []).append(e)
+    for pair in by_triple.values():
+        if len(pair) == 2:
+            ra, rb = find(pair[0]), find(pair[1])
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
 
     comp_members: dict[int, list[int]] = {}
     for e in first_pos:
-        comp_members.setdefault(dsu.find(e), []).append(e)
-
-    # component ids in discovery order = min first_pos of members
+        comp_members.setdefault(find(e), []).append(e)
     comps = sorted(comp_members.values(), key=lambda ms: min(first_pos[m] for m in ms))
-
-    rows = []
-    mains: list[int] = []
-    for cid, members in enumerate(comps):
-        main = max(sorted(members), key=lambda m: (degree[m], -m))
-        mains.append(main)
-        for m in members:
-            rows.append((url, m, text_of[m], cid, len(members), degree[m], m == main, False))
-
+    # main: first strict degree-argmax, ties → lower entity_id
+    mains = [max(sorted(ms), key=lambda m: (degree[m], -m)) for ms in comps]
     topic = None
     if comps:
         # largest component, first-discovered wins ties
-        big_idx = max(range(len(comps)), key=lambda i: (len(comps[i]), -i))
-        topic = mains[big_idx]
+        topic = mains[max(range(len(comps)), key=lambda i: (len(comps[i]), -i))]
+    return comps, degree, text_of, mains, topic
 
-    out = pd.DataFrame(
-        rows,
-        columns=[
-            "url", "entity_id", "entity_text", "component_id",
-            "component_size", "degree", "is_main", "is_topic",
-        ],
+
+def _analyze_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+    """pandas adapter over doc_graph. Input: per-doc aligned node rows
+    (url, pos, entity_id, entity_text, t_idx). Output: one row per
+    entity with component/degree/main/topic flags."""
+    pdf = pdf.sort_values("pos", kind="stable")
+    url = pdf["url"].iloc[0]
+    comps, degree, text_of, mains, topic = doc_graph(
+        pdf["entity_id"].tolist(), pdf["entity_text"].tolist(), pdf["t_idx"].tolist()
     )
-    if topic is not None:
-        out.loc[out["entity_id"] == topic, "is_topic"] = True
-    return out
+    rows = [
+        (url, m, text_of[m], cid, len(members), degree[m], m == main, m == topic)
+        for cid, (members, main) in enumerate(zip(comps, mains))
+        for m in members
+    ]
+    return pd.DataFrame(rows, columns=GRAPH_COLUMNS)
 
 
 def analyze_graph(aligned_nodes: DataFrame, pre_grouped: bool = False) -> DataFrame:
@@ -142,7 +133,7 @@ def analyze_graph(aligned_nodes: DataFrame, pre_grouped: bool = False) -> DataFr
     inputs."""
     from ctinexus_spark.partitioning import grouped_map_stitched
 
-    cols = aligned_nodes.select("url", "pos", "t_idx", "side", "entity_id", "entity_text")
+    cols = aligned_nodes.select("url", "pos", "t_idx", "entity_id", "entity_text")
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = [_analyze_doc(g) for _, g in pdf.groupby("url", sort=False)]
@@ -255,3 +246,15 @@ def infer_links(pairs: DataFrame, model) -> DataFrame:
             yield _link_rows(pdf, model)
 
     return pairs.mapInPandas(run, schema=LINKS_SCHEMA)
+
+
+def accepted_links(links: DataFrame) -> DataFrame:
+    """LINKS_SCHEMA rows the hallucination guard accepted
+    (status 'ok') → KG rows (url, subj, pred, obj, source='predicted')."""
+    return links.filter(F.col("status") == "ok").select(
+        "url",
+        F.col("subject_text").alias("subj"),
+        F.col("relation").alias("pred"),
+        F.col("object_text").alias("obj"),
+        F.lit("predicted").alias("source"),
+    )

@@ -16,7 +16,7 @@ from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
 from ctinexus_spark.operators.et import tag_triples
 from ctinexus_spark.operators.ie import attach_demos, extract_triples
-from ctinexus_spark.operators.lp import analyze_graph, predict_links
+from ctinexus_spark.operators.lp import accepted_links, analyze_graph, predict_links
 from ctinexus_spark.operators.materialize import materialize_kg
 from ctinexus_spark.operators.normalize import normalize_documents
 
@@ -45,7 +45,6 @@ def run_pipeline_checkpointed(
         extracted_triples,
         link_main_pairs,
     )
-    from ctinexus_spark.operators.normalize import normalize_documents
 
     cfg = config or PipelineConfig()
 
@@ -71,14 +70,7 @@ def run_pipeline_checkpointed(
         spark, "kg_links", pairs_input,
         lambda fr: link_main_pairs(fr, docs, model), key="url",
     )
-    predicted = links.filter(F.col("status") == "ok").select(
-        "url",
-        F.col("subject_text").alias("subj"),
-        F.col("relation").alias("pred"),
-        F.col("object_text").alias("obj"),
-        F.lit("predicted").alias("source"),
-    )
-    return extracted_triples(fused).unionByName(predicted)
+    return extracted_triples(fused).unionByName(accepted_links(links))
 
 
 @dataclass

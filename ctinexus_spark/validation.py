@@ -2,10 +2,10 @@
 
 Mirrors the reference's defensive log-and-drop filters
 (llm_processor.py:81-137 IE; cti_processor.py:118-144 typed;
-graph_constructor.py:212-243 preprocessed; graph_constructor.py:19-48
-aligned). In Spark these run either as pure functions inside pandas
-UDFs (dict-shaped model output) or as struct-field predicates; rejects
-go to a side-output table instead of a log line.
+graph_constructor.py:19-48 aligned). In Spark these run either as
+pure functions inside pandas UDFs (dict-shaped model output) or as
+struct-field predicates; rejects go to a side-output table instead of
+a log line.
 """
 
 from __future__ import annotations
@@ -46,20 +46,6 @@ def valid_typed_triplet(t) -> bool:
     for side in ("subject", "object"):
         v = t.get(side)
         if not isinstance(v, dict) or not v.get("text"):
-            return False
-    return _nonempty_str(t.get("relation"))
-
-
-def valid_preprocessed_triplet(t) -> bool:
-    """EA-input shape: mention_id present (0 ok), mention_text
-    non-empty, mention_class present."""
-    if not _has_keys(t):
-        return False
-    for side in ("subject", "object"):
-        v = t.get(side)
-        if not isinstance(v, dict):
-            return False
-        if "mention_id" not in v or not v.get("mention_text") or "mention_class" not in v:
             return False
     return _nonempty_str(t.get("relation"))
 

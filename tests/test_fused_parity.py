@@ -17,8 +17,9 @@ def _kg_set(df):
     return {(r.url, r.subj, r.pred, r.obj, r.source) for r in df.collect()}
 
 
-def test_fused_equals_modular_on_cti(spark, cti_documents):
-    cfg = PipelineConfig()
+@pytest.mark.parametrize("mode", ["star", "cc"])
+def test_fused_equals_modular_on_cti(spark, cti_documents, mode):
+    cfg = PipelineConfig(ea_cluster_mode=mode)
     alias = {"Cozy Bear": "APT29"}
     modular = run_pipeline(cti_documents, StubModel(cfg, alias_map=alias), cfg)
     docs = normalize_documents(cti_documents, lang_filter="en")
